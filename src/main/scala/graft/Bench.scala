@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — prints one JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR, and writes the same JSON to `BENCH.json` in the
@@ -335,12 +334,7 @@ object Bench {
       if (cand != null && java.nio.file.Files.isDirectory(cand)) cand.toString
       else sfDir
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(cpus.toString)
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     calibrationSec() // JIT warm-up; first probe compiles the loop
     val calStart = calibrationSec()

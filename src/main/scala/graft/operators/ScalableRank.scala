@@ -163,8 +163,9 @@ object ScalableRank {
 
   /** Estimated-input-bytes threshold above which [[withRowNumberAuto]]
     * picks the bucket shape. Same calibration family as
-    * `DistributionValidator.AutoBucketLocateBytes`: ProfileRankOneGroup
-    * measured the window form at exponent ≈1.14 (190 s for a 60M-row
+    * `DistributionValidator.AutoBucketLocateBytes`: SCALING.md's
+    * `ScalableRank` one-global-ordering rows measured the window form
+    * at exponent ≈1.14 (190 s for a 60M-row
     * single-task ordering, 1 of 32 cores busy) vs bucket-rank ≈0.51
     * (15.4 s), with the window form ahead below ~1.5M rows/group
     * (≈25 MB of (value, key) pairs). 32 MB errs low on purpose:
@@ -356,7 +357,8 @@ object ScalableRank {
     * row_number per `partCols` ordered by (`valueCol`, `tieCols`…),
     * `nCol` = group count, same loud null/NaN refusal. One exchange on
     * `partCols` and a per-partition sort: the RIGHT shape below the
-    * ~1.5M-rows/group crossover (ProfileRankOneGroup), where the
+    * ~1.5M-rows/group crossover (SCALING.md, `ScalableRank` one
+    * global ordering), where the
     * bucket lattice's fixed stage cost is pure overhead. Empty
     * `partCols` sorts the whole frame in one task — small frames
     * only. */
@@ -387,12 +389,13 @@ object ScalableRank {
   /** Largest tolerated max-bucket share among span>0 groups before
     * [[withRowNumberAuto]]'s probe switches the bucket shape onto
     * equi-depth boundaries. A balanced profile sits near 1/`buckets`
-    * (~0.00024 at the default 4096); the collapsed profile
-    * ProfileRankSkew measures (2.4–3.8× slower than equi-depth at
-    * 20M/60M rows) reads ~1.0. Half is the regime boundary where "one
-    * bucket's sort" is no longer meaningfully smaller than "the
-    * group's sort" — mild skew below it costs a bounded constant, so
-    * the probe only reshapes the genuinely pathological profile. */
+    * (~0.00024 at the default 4096); the collapsed profile of
+    * SCALING.md's `ScalableRank` skew rows (2.4–3.8× slower than
+    * equi-depth at 20M/60M rows) reads ~1.0. Half is the regime
+    * boundary where "one bucket's sort" is no longer meaningfully
+    * smaller than "the group's sort" — mild skew below it costs a
+    * bounded constant, so the probe only reshapes the genuinely
+    * pathological profile. */
   val SkewShareThreshold = 0.5
 
   /** Shape-picking face: the window form below [[AutoBucketRankBytes]]

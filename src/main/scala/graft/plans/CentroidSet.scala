@@ -25,9 +25,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * per task.
   *
   * Value-identical to the join/aggregate shape, field by field:
-  *   - cosine = VectorDot(v, cv_j) / (n * cn_j) — same left-to-right
-  *     fold, same null semantics (length mismatch or null element →
-  *     null cosine);
+  *   - cosine = try_divide(VectorDot(v, cv_j), n * cn_j) — same
+  *     left-to-right fold, same null semantics (length mismatch, null
+  *     element or a zero divisor → null cosine), so a zero-norm row's
+  *     cosines are all null and it goes to the lowest centroid id;
   *   - ordering = Spark's struct(cos, -cent_id) max: null cosine sorts
   *     below every value, NaN above (SQLOrderingUtil.compareDoubles),
   *     ties break to the LOWEST centroid id;
@@ -76,7 +77,12 @@ final class CentroidSet private (
             if (v.isNullAt(i)) cosNull = true
             else { s += v.getDouble(i) * cv(i); i += 1 }
           }
-          if (!cosNull) cos = s / (n * cns(j))
+          if (!cosNull) {
+            // try_divide: a zero divisor (zero-norm row, or a norm that
+            // underflows to 0) gives a null cosine, never NaN/±Inf
+            val d = n * cns(j)
+            if (d == 0.0) cosNull = true else cos = s / d
+          }
         }
       }
       if (j == 0) { bestNull = cosNull; bestCos = cos }

@@ -90,39 +90,6 @@ import java.nio.charset.StandardCharsets
   *    whose every row was legitimately deleted returns an empty frame
   *    instead of refusing — "never committed" still raises.
   */
-/** Optional wall-clock attribution for the upsert layout's per-batch
-  * path (round 16 — the overhead-attribution IvmScale section): when
-  * enabled, [[BucketStore]] accumulates driver-observed nanos per
-  * category — `manifest` (pointer-file reads/writes, marker I/O,
-  * committed-id listings), `validate` (the per-side CDC refusal probe),
-  * `buckets` (the delta's touched-bucket collect), `write` (parquet
-  * data jobs, which also materialize the fold compute they carry).
-  * Off by default and free when off; measurement-only, never consulted
-  * by the store logic. */
-object StoreTimers {
-  @volatile var enabled: Boolean = false
-  private val acc =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.atomic.AtomicLong]()
-
-  private[streaming] def timed[T](cat: String)(f: => T): T =
-    if (!enabled) f
-    else {
-      val t0 = System.nanoTime()
-      try f finally acc.computeIfAbsent(cat,
-        _ => new java.util.concurrent.atomic.AtomicLong)
-        .addAndGet(System.nanoTime() - t0)
-    }
-
-  def reset(): Unit = acc.clear()
-
-  /** Accumulated seconds per category since the last [[reset]]. */
-  def seconds: Map[String, Double] = {
-    import scala.jdk.CollectionConverters._
-    acc.asScala.map { case (k, v) => k -> v.get / 1e9 }.toMap
-  }
-}
-
 object BucketStore {
 
   /** Default bound on a family manifest's distinct pointed batch
@@ -146,7 +113,7 @@ object BucketStore {
     new HPath(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** Batch ids of `family` that carry the commit marker. */
-  def committedIn(spark: SparkSession, dir: String, family: String): Set[Long] = StoreTimers.timed("manifest") {
+  def committedIn(spark: SparkSession, dir: String, family: String): Set[Long] = {
     val root = familyRoot(dir, family)
     val fs = fsOf(spark, dir)
     if (!fs.exists(root)) Set.empty
@@ -164,7 +131,7 @@ object BucketStore {
   // ---- manifests ---------------------------------------------------
 
   private def writeManifest(fs: FileSystem, path: HPath,
-      entries: Map[Int, Long]): Unit = StoreTimers.timed("manifest") {
+      entries: Map[Int, Long]): Unit = {
     // deterministic bytes (sorted) so a redelivered batch overwrites
     // identical content
     val body = entries.toSeq.sorted
@@ -173,7 +140,7 @@ object BucketStore {
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
-  private def readManifestFile(fs: FileSystem, path: HPath): Map[Int, Long] = StoreTimers.timed("manifest") {
+  private def readManifestFile(fs: FileSystem, path: HPath): Map[Int, Long] = {
     if (!fs.exists(path)) return Map.empty
     val in = fs.open(path)
     val body = try {
@@ -217,8 +184,8 @@ object BucketStore {
     // as EXPLICIT partition paths: the manifest already knows exactly
     // which directories exist, so the driver never lists the batch
     // directory's full bucket fan-out (at thousands of buckets that
-    // listing dominated a pruned read's cost — measured in the r15w
-    // IvmScale section's first cut)
+    // listing dominated a pruned read's cost — measured in round 15's
+    // first cut, SCALING.md's `BucketStore` upsert wall row)
     wanted.groupBy(_._2).toSeq.sortBy(_._1).map { case (pid, entries) =>
       val base = new HPath(batchDir(dir, family, pid), sub).toString
       val paths = entries.keys.toSeq.sorted.map(b => s"$base/$bucketCol=$b")
@@ -273,10 +240,8 @@ object BucketStore {
   /** The batch-bounded distinct bucket list of `df` under `keys` — the
     * audited-collect discipline (≤ `storeBuckets` ints). */
   def bucketsOf(df: DataFrame, keys: Seq[String], storeBuckets: Int): Seq[Int] =
-    StoreTimers.timed("buckets") {
-      df.select(bucketize(keys, storeBuckets).as("__b")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-    }
+    df.select(bucketize(keys, storeBuckets).as("__b")).distinct()
+      .collect().map(_.getInt(0)).toSeq
 
   // NOT underscore-prefixed: Spark's file index treats _-prefixed
   // paths as hidden metadata and would ignore the stub's files
@@ -315,20 +280,18 @@ object BucketStore {
           bucketCol, rows)), touched ++ carried.keys)
       else (rows, touched)
     val dataPath = new HPath(bd, sub)
-    if (allTouched.nonEmpty) StoreTimers.timed("write") {
+    if (allTouched.nonEmpty)
       allRows.repartition(col(bucketCol))
         .write.mode("overwrite").partitionBy(bucketCol)
         .parquet(dataPath.toString)
-    }
     // buckets actually PRESENT after the write (a touched bucket whose
     // rows all died leaves no partition dir — it drops off the
     // manifest, which is exactly "empty")
-    val present: Set[Int] = StoreTimers.timed("manifest") {
+    val present: Set[Int] =
       if (!fs.exists(dataPath)) Set.empty
       else fs.listStatus(dataPath).toSeq
         .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$bucketCol="))
         .map(_.getPath.getName.stripPrefix(s"$bucketCol=").toInt).toSet
-    }
     val entries = (prev -- allTouched) ++ present.iterator.map(_ -> batchId)
     writeManifest(fs, new HPath(bd, manifestKind), entries)
   }
@@ -352,7 +315,7 @@ object BucketStore {
 
   /** Write the family's commit marker — the LAST step of its batch. */
   def commit(spark: SparkSession, dir: String, family: String,
-      batchId: Long): Unit = StoreTimers.timed("manifest") {
+      batchId: Long): Unit = {
     val fs = fsOf(spark, dir)
     fs.create(new HPath(batchDir(dir, family, batchId), "_SUCCESS"), true)
       .close()
@@ -518,9 +481,7 @@ object BucketStore {
         .agg(count(lit(1)).as("__c")).filter(col("__c") > 1)
         .select(lit("inserts the same key twice").as("__viol")))
       .distinct()
-    val violMsgs = StoreTimers.timed("validate") {
-      viols.collect().map(_.getString(0))
-    }
+    val violMsgs = viols.collect().map(_.getString(0))
     require(violMsgs.isEmpty,
       s"change batch $batchId ($side side) ${violMsgs.mkString("; and ")}")
 
@@ -572,10 +533,8 @@ object BucketStore {
       prevId: Option[Long]): (DataFrame, Seq[Int]) = {
     val spark = netDelta.sparkSession
     val p = payloadCols.map(col)
-    val touched = StoreTimers.timed("buckets") {
-      netDelta.select(bucketExpr.cast("int").as("__b")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-    }
+    val touched = netDelta.select(bucketExpr.cast("int").as("__b")).distinct()
+      .collect().map(_.getInt(0)).toSeq
     val template = netDelta.filter(lit(false))
       .select(p :+ lit(0L).as("__mult"): _*)
     val prevSlice = readBuckets(spark, dir, family, prevId, touched, template)

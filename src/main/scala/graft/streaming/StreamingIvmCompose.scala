@@ -44,8 +44,9 @@ import graft.operators.IvmJoin
   * touched (plus a ≤`storeBuckets`-line manifest per family), so bytes
   * written per batch are ∝ |delta|, never ∝ |store| — the r14
   * "test-scale simplification" (full five-family rewrite per commit)
-  * is gone; IvmScale measures the write-side proportionality across
-  * 10× store growth. Commit = all five family markers,
+  * is gone; SCALING.md's `BucketStore` upsert bytes rows measure the
+  * write-side proportionality across 10× and 100× store growth.
+  * Commit = all five family markers,
   * recompute-from-latest-committed on redelivery — the family's
   * exactly-once discipline, unchanged.
   *

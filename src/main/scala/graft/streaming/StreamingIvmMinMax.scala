@@ -32,8 +32,8 @@ import graft.operators.IvmFold
   * provably derives from the bytes the next batch will read; its read
   * prunes to the delete rows' buckets (affected groups ⊆ delete groups
   * ⊆ delete buckets — a batch-bounded driver list), and insert-only
-  * batches read ZERO store files (IvmScale's keyed-store row measures
-  * it).
+  * batches read ZERO store files (SCALING.md's bucket-partitioned
+  * `foldMinMax` row measures it).
   *
   * Contract (StreamingIvmMinMaxSpec): after batch N commits,
   * [[readAgg]] equals the full min/max recompute over every surviving

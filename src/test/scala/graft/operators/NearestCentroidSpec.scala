@@ -9,9 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * be VALUE-IDENTICAL to the join/aggregate shape it replaced:
   * `crossJoin(broadcast(cents)).groupBy(id, v, n)
   *   .agg(max(struct(cos, -cent_id)))`.
-  * These tests drive both shapes over adversarial inputs — ties, NaN
-  * cosines (zero-norm rows), null elements, length mismatches — and
-  * require identical assignments row for row.
+  * These tests drive both shapes over adversarial inputs — ties, zero
+  * divisors (zero-norm rows), null elements, length mismatches — and
+  * require identical assignments row for row. The cosine divides with
+  * `try_divide`: a zero divisor gives a null cosine (ANSI `/` would
+  * raise DIVIDE_BY_ZERO), and a row whose cosines are all null goes to
+  * the lowest centroid id.
   */
 class NearestCentroidSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.core.GraftSession.local("4", "nearest-centroid-test")
@@ -20,8 +23,8 @@ class NearestCentroidSpec extends AnyFunSuite {
     * specification the map-side form is checked against. */
   private def assignOld(c: DataFrame, cents: DataFrame): DataFrame =
     c.crossJoin(broadcast(cents))
-      .withColumn("cent_cos",
-        Similarity.dot(col("v"), col("cent_v")) / (col("n") * col("cent_n")))
+      .withColumn("cent_cos", try_divide(
+        Similarity.dot(col("v"), col("cent_v")), col("n") * col("cent_n")))
       .groupBy(col("id"), col("v"), col("n"))
       .agg(max(struct(col("cent_cos"), (-col("cent_id")).as("neg_cent"))).as("best"))
       .select(col("id"), (-col("best.neg_cent")).as("list_id"))
@@ -60,12 +63,13 @@ class NearestCentroidSpec extends AnyFunSuite {
     (old, neu)
   }
 
-  private def check(corpus: DataFrame, centIds: Seq[Long]): Unit = {
+  private def check(corpus: DataFrame, centIds: Seq[Long]): Map[Long, Long] = {
     val (old, neu) = assignments(corpus, centIds)
     assert(old.keySet == neu.keySet, s"row sets differ: $old vs $neu")
     old.keySet.foreach { id =>
       assert(old(id) == neu(id), s"id $id: old=${old(id)} new=${neu(id)}")
     }
+    neu
   }
 
   test("plain corpus: identical assignments, including exact cosine ties") {
@@ -81,16 +85,19 @@ class NearestCentroidSpec extends AnyFunSuite {
     check(corpus, Seq(0L, 1L))
   }
 
-  test("zero-norm rows (all-NaN cosines) and zero-norm-adjacent values agree") {
+  test("zero-norm rows (all-null cosines) and zero-norm-adjacent values agree") {
     import spark.implicits._
     val corpus = Seq(
       (0L, Array(1.0, 0.0)),
       (7L, Array(0.0, 1.0)),
-      (2L, Array(0.0, 0.0)),        // zero norm → NaN cosine everywhere
-      (3L, Array(1e-300, 0.0)),     // denormal-ish norm
+      (2L, Array(0.0, 0.0)),        // zero norm → null cosine everywhere
+      (3L, Array(1e-300, 0.0)),     // norm underflows to 0 → null cosines
       (4L, Array(-0.0, 0.0))        // negative zero vector
     ).toDF("id", "v")
-    check(corpus, Seq(0L, 7L))
+    val got = check(corpus, Seq(0L, 7L))
+    Seq(2L, 3L, 4L).foreach { id =>
+      assert(got(id) == 0L, s"zero-norm row $id went to ${got(id)}, not the lowest id")
+    }
   }
 
   test("null elements and length mismatches (null cosines) agree") {

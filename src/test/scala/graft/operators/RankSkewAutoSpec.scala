@@ -10,7 +10,7 @@ import ScalableRank._
 /** withRowNumberAuto's bucket shape must self-defend against
   * adversarial value skew (round 14): the probe reads the max bucket
   * share off the equi-width offsets frame it already computes, and a
-  * collapsed profile — the ProfileRankSkew shape, where every
+  * collapsed profile — SCALING.md's `ScalableRank` skew shape, where every
   * non-outlier row lands in equi-width bucket 0 and the "in-bucket
   * sort is 1/buckets of the group" guarantee silently becomes "one
   * task sorts the frame" — switches the boundaries to equi-depth.
@@ -20,7 +20,7 @@ import ScalableRank._
 class RankSkewAutoSpec extends AnyFunSuite {
   lazy val spark = graft.core.GraftSession.local("4", "rank-skew-auto")
 
-  // the ProfileRankSkew profile at spec scale: 1 in 1000 rows is a
+  // SCALING.md's collapsed-skew profile at spec scale: 1 in 1000 rows is a
   // large outlier (up to n); everything else sits on 97 tie-heavy
   // points within [0, 1e-7]
   private def skewed(n: Int): DataFrame =
